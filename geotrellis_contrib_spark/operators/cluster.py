@@ -11,15 +11,14 @@ label's label. Step (b) makes convergence O(log d) rounds in the label-hop
 diameter d instead of O(d): a 10^6-node chain converges in ~20 rounds, not
 10^6 (measured on the sf0.1 embed near-pair graph: 18 rounds -> 6).
 
-Round batching (round-4): the driver-side fixed cost per materialization
-(one localCheckpoint job + one convergence-count job, ~0.6s each on a busy
-host) dominated the per-round WORK at test scale — 12 materializations was
-~80% of embed_dup_clusters' 15.6s. ``rounds_per_sync`` propagation+doubling
-rounds now run inside ONE lazy plan between materializations, halving the
-job count at identical results (min-label propagation is idempotent and
-order-free; running two rounds before checking convergence can only
-converge faster). Convergence is still read off the same materialization
-(``_old`` = labels at sync-batch start rides through the batch).
+Every iterative pass here (connected components, k-core, both Strahler
+phases) runs through :func:`geotrellis_contrib_spark.util.fixpoint`: a
+fixed number of lazy rounds per driver sync, one job per sync that both
+materializes the state and reads the convergence probe, and one uniform
+fail-loud round cap. The driver-side fixed cost per sync dominated the
+per-round work at test scale, so connected components runs two
+propagation+doubling rounds per sync (min-label propagation is idempotent
+and order-free, so batching cannot change the labels).
 
 Scale notes: labels are single longs (LongHashedRelation joins); edges are
 symmetrized once; per-round state is (node, label) — 16 bytes/node. At
@@ -31,13 +30,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from geotrellis_contrib_spark.util import broadcast_if_small, fixpoint
+
 
 def _propagate_and_double(sym: DataFrame, cur: DataFrame) -> DataFrame:
-    """One logical CC round on ``cur`` (id, component, _old): every node
+    """One logical CC round on ``cur`` (id, component): every node
     offers its label to its neighbors, keep min(own, best offer), then
-    pointer-double (jump to the label of my label's node). ``_old`` rides
-    through untouched so convergence is read off the batch's single
-    materialization. Pure plan construction — no action."""
+    pointer-double (jump to the label of my label's node). ``_old`` keeps
+    the round's input label, so ``component != _old`` flags the rows this
+    round changed. Pure plan construction — no action."""
+    cur = cur.select("id", "component", F.col("component").alias("_old"))
     offered = (sym.join(cur, sym.dst == cur.id)
                .groupBy("src").agg(F.min("component").alias("offer")))
     tent = (cur.join(offered, cur.id == offered.src, "left")
@@ -96,7 +98,6 @@ def _cc_driver(spark, rows, id_type: str) -> DataFrame:
 
 def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
                          max_iter: int = 25,
-                         rounds_per_sync: int = 2,
                          small_graph_edges: int = 500_000) -> DataFrame:
     """Label every node of the undirected pair graph with the MIN node id
     reachable from it. Input: one row per edge (any direction, dupes ok).
@@ -115,10 +116,9 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
     ``small_graph_edges=0`` disables the fast path (and its probe)
     outright.
 
-    ``max_iter`` counts materialization batches; each batch runs
-    ``rounds_per_sync`` propagate+double rounds lazily, so the effective
-    propagation depth is max_iter * rounds_per_sync (with doubling:
-    exponential in it)."""
+    ``max_iter`` counts driver syncs; each sync runs two propagate+double
+    rounds lazily, so the effective propagation depth is 2 * max_iter
+    (with doubling: exponential in it)."""
     # ids keep their input type: longs get the LongHashedRelation fast
     # path; strings still hash-join (MIN over strings = lexicographic,
     # deterministic — and the corpus's zero-padded doc ids sort numerically)
@@ -146,30 +146,13 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
                 .withColumn("component", F.col("id")) \
                 .repartition(n_parts, "id")
     labels = labels.localCheckpoint(eager=True)
-    changed = 1
-    # ONE driver job per batch (r7): the convergence probe aggregates
-    # over the LAZY localCheckpoint, so materialization and the answer
-    # share one job instead of an eager-checkpoint job plus a probe job.
-    for _ in range(max_iter):
-        cur = labels.withColumn("_old", F.col("component"))
-        for _ in range(rounds_per_sync):
-            cur = _propagate_and_double(sym, cur)
-        nxt = cur.localCheckpoint(eager=False)
-        changed = int(nxt.agg(F.max(
-            (F.col("component") != F.col("_old")).cast("int")))
-            .collect()[0][0] or 0)
-        labels = nxt.drop("_old")
-        if changed == 0:
-            break
-    if changed != 0:
-        # min-label propagation spreads one hop per round: a component whose
-        # label-hop diameter exceeds the budget would exit here UNCONVERGED
-        # and silently split clusters (wrong survivors downstream). Fail loudly.
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} sync "
-            f"batches x {rounds_per_sync} rounds (graph label-hop diameter "
-            f"too large); raise max_iter")
-    return labels
+    # a component whose label-hop diameter exceeds the round budget would
+    # exit UNCONVERGED and silently split clusters — fixpoint fails loud
+    return fixpoint(
+        labels, lambda cur: _propagate_and_double(sym, cur),
+        F.max((F.col("component") != F.col("_old")).cast("int")),
+        max_rounds=max_iter, rounds_per_sync=2,
+        what="connected_components").drop("_old")
 
 
 def dup_clusters(pairs: DataFrame, a_col: str, b_col: str) -> DataFrame:
@@ -219,17 +202,14 @@ def pagerank(edges: DataFrame, iters: int = 3, d: float = 0.875,
     # the weighted edge table is reused by every iteration — pin it too
     e = edges.join(deg, "src").localCheckpoint(eager=True)
     n_nodes = nodes.count()  # one tiny job; N is a scalar of the state
-    # size-adaptive join strategy (r7, see strahler_order): pr and the
-    # per-iteration inflow aggregate are one row per node — below the
-    # cap they broadcast (the edge table is never shuffled per
-    # iteration); above it the co-shuffled plan is unchanged. n_nodes
-    # is already a required scalar, so the decision is free.
-    bc = F.broadcast if n_nodes <= 2_000_000 else (lambda df: df)
     import math
     base_q = math.floor((1.0 - d) * q / n_nodes + 0.5)
     pr = nodes.select("node",
                       F.lit(math.floor(q / n_nodes + 0.5))
                       .cast("long").alias("pr_q"))
+    # pr and the per-iteration inflow aggregate are one row per node:
+    # when they broadcast, the edge table is never shuffled per iteration
+    bc = broadcast_if_small(pr, n_nodes)
     for _ in range(int(iters)):
         contrib = (e.join(bc(pr), e["src"] == pr["node"])
                    .select(F.col("dst").alias("node"),
@@ -338,49 +318,27 @@ def strahler_order(edges: DataFrame, child: str = "child",
                              F.min("c").alias("only"))
     base = (nodes.join(nch, nodes.id == nch.p, "left")
             .select("id", F.coalesce("nc", F.lit(0)).alias("nc"), "only")
-            # LAZY: the n_nodes count below materializes it — one job,
+            # LAZY: the node count below materializes it — one job,
             # not an eager-checkpoint job plus a count job (r7)
             .localCheckpoint(eager=False))
-    # size-adaptive join strategy (r7, guide §2/§3): localCheckpoint
-    # erases Catalyst size stats, so every per-round self-join of the
-    # (tiny at test scale, huge at crawl scale) pointer tables planned
-    # as a full shuffle join — ~12 one-row shuffle stages per sync
-    # dominated the forced-distributed gate. One RDD count over the
-    # already-materialized base decides: below the cap (2M nodes x
-    # 16 B = 32 MB, inside the session's 64 MB autoBroadcast budget)
-    # the per-round lookup sides are broadcast (zero exchanges per
-    # round); above it the plan keeps the shuffle joins unchanged.
-    # Pointer values are identical either way.
-    n_nodes = base.count()
-    bc = F.broadcast if n_nodes <= 2_000_000 else (lambda df: df)
     ptr = base.select(
         "id", F.when(F.col("nc") == 1, F.col("only"))
               .otherwise(F.col("id")).alias("ptr"))
-    # ONE driver job per materialization (r7): the moved flag rides the
-    # next pointer table ( _mv = old ptr != new ptr), so the lazy
-    # checkpoint's materializing job also answers convergence; TWO
-    # doubling steps run lazily per materialization (pointer doubling
-    # is idempotent past its fixpoint, so batching cannot change the
-    # converged table — it only quarters the driver sync count).
-    for _ in range(max_rounds):
-        cur = ptr.withColumn("_mv", F.lit(0))
-        for _ in range(2):
-            lk = cur.select(F.col("id").alias("_i"),
-                            F.col("ptr").alias("_p"))
-            cur = (cur.join(bc(lk), cur.ptr == lk._i)
-                   .select(cur["id"], lk["_p"].alias("ptr"),
-                           F.greatest(cur["_mv"],
-                                      (lk["_p"] != cur["ptr"])
-                                      .cast("int")).alias("_mv")))
-        nxt = cur.localCheckpoint(eager=False)
-        moved = int(nxt.agg(F.max("_mv")).collect()[0][0] or 0)
-        ptr = nxt.drop("_mv")
-        if moved == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"strahler contraction did not settle in {max_rounds} "
-            "rounds (cycle in the flow table?)")
+    # every per-round lookup side is a two-long pointer/order table; the
+    # count over the already-materialized base sizes it for free
+    bc = broadcast_if_small(ptr, base.count())
+
+    def contract(cur):
+        # _mv flags the rows this doubling step moved
+        lk = cur.select(F.col("id").alias("_i"), F.col("ptr").alias("_p"))
+        return (cur.join(bc(lk), cur.ptr == lk._i)
+                .select(cur["id"], lk["_p"].alias("ptr"),
+                        (lk["_p"] != cur["ptr"]).cast("int").alias("_mv")))
+
+    ptr = fixpoint(ptr, contract, F.max("_mv"), max_rounds=max_rounds,
+                   rounds_per_sync=2,
+                   what="strahler_order contraction (cycle in the flow "
+                        "table?)").drop("_mv")
 
     term = base.filter(F.col("nc") != 1).select("id", "nc")
     jed = (e.join(bc(term.select(F.col("id").alias("_t"))),
@@ -417,48 +375,25 @@ def strahler_order(edges: DataFrame, child: str = "child",
                      .otherwise(F.col("mx.o")).cast("long").alias("o")))
         return g.unionByName(leaves1)
 
-    # orders only grow toward the least fixpoint, so running several
-    # logical rounds between materializations cannot change the answer
-    # — it only converges faster per sync (the connected_components
-    # rounds_per_sync discipline: the driver-side checkpoint+count
-    # fixed cost dominated the per-round work at test scale)
-    rounds_per_sync = 4
-    cur = term.select("id", F.lit(1).cast("long").alias("o"))
-    # ONE driver job per batch, NO compare join (r7): orders grow
-    # MONOTONICALLY toward the least fixpoint, so sum(o) is strictly
-    # increasing until convergence — the sum aggregate rides the same
-    # job that materializes the lazy localCheckpoint, and an unchanged
-    # sum IS convergence. (sum(long) wraps only past ~2^57 nodes — far
-    # beyond any deployable graph; max_rounds still bounds the loop.)
-    prev_sum = None
-    for _ in range(max_rounds):
-        nxt = cur
-        for _ in range(rounds_per_sync):
-            nxt = jacobi_round(nxt)
-        nxt = nxt.localCheckpoint(eager=False)
-        s = nxt.agg(F.sum("o")).collect()[0][0]
-        cur = nxt
-        if s == prev_sum:
-            break
-        prev_sum = s
-    else:
-        raise RuntimeError(
-            f"strahler Jacobi did not settle in {max_rounds} rounds "
-            "(cycle in the flow table?)")
+    # orders only GROW toward the least fixpoint, so sum(o) strictly
+    # increases until convergence — the monotone probe's precondition.
+    # (sum(long) wraps only past ~2^57 nodes.)
+    cur = fixpoint(term.select("id", F.lit(1).cast("long").alias("o")),
+                   jacobi_round, F.sum("o"), max_rounds=max_rounds,
+                   rounds_per_sync=4, monotone=True,
+                   what="strahler_order Jacobi (cycle in the flow table?)")
     # pure-unary cycles (a->b->a with nc==1 everywhere) contract to
     # self-pointers whose representative is itself an nc==1 node — such
-    # rows have NO terminal match here. r6 ADVICE raised via a separate
-    # probe job; r7 folds the guard INTO the result plan (left join +
-    # in-plan raise_error on a null representative): same fail-loud
-    # semantics, identical rows for every acyclic input, one less action.
+    # rows have NO terminal match here. The guard is a FILTER on the
+    # joined representative, not a projected value, so a consumer that
+    # prunes the strahler column (select("node"), count()) still runs it.
     return (ptr.join(bc(cur.select(F.col("id").alias("_t2"), "o")),
                      ptr.ptr == F.col("_t2"), "left")
-            .select(F.col("id").alias("node"),
-                    F.when(F.col("_t2").isNull(), F.raise_error(F.lit(
-                        "strahler contraction resolved a node to an "
-                        "nc==1 representative (cycle in the flow "
-                        "table)")).cast("long"))
-                    .otherwise(F.col("o")).alias("strahler")))
+            .filter(F.when(F.col("_t2").isNull(), F.raise_error(F.lit(
+                "strahler contraction resolved a node to an nc==1 "
+                "representative (cycle in the flow table)")))
+                .otherwise(F.lit(True)))
+            .select(F.col("id").alias("node"), F.col("o").alias("strahler")))
 
 
 def triangle_count(edges: DataFrame, src: str = "src",
@@ -552,17 +487,16 @@ def mst_boruvka(edges: DataFrame, src: str = "src", dst: str = "dst",
     if ndup:
         raise ValueError("mst_boruvka: duplicate edge weights — the "
                          "unique-MST condition does not hold")
-    # size-adaptive join strategy (r7, see strahler_order): the per-node
-    # component table is broadcast below the cap so the two comp-lookup
-    # joins stop shuffling the edge table every round; nodes is
-    # materialized ONCE so each round's comp rebuild is a cheap
-    # broadcast join over it instead of a re-run union+distinct.
     n_edges = e.count()
-    bc = F.broadcast if n_edges <= 2_000_000 else (lambda df: df)
+    # nodes is materialized ONCE so each round's comp rebuild is a cheap
+    # join over it instead of a re-run union+distinct
     nodes = (e.select(F.col("a").alias("id"))
              .unionByName(e.select(F.col("b").alias("id"))).distinct()
              .localCheckpoint(eager=True))
     comp = nodes.select("id", F.col("id").alias("c"))
+    # when the per-node component table broadcasts, the two comp-lookup
+    # joins stop shuffling the edge table every round
+    bc = broadcast_if_small(comp, n_edges)
     chosen = None
     for _ in range(max_rounds):
         ca = comp.select(F.col("id").alias("a"), F.col("c").alias("ca"))
@@ -605,7 +539,7 @@ def mst_boruvka(edges: DataFrame, src: str = "src", dst: str = "dst",
 
 
 def kcore(edges: DataFrame, src: str = "src", dst: str = "dst",
-          max_rounds: int = 64, rounds_per_sync: int = 2) -> DataFrame:
+          max_rounds: int = 64) -> DataFrame:
     """K-CORE DECOMPOSITION (coreness per node) by distributed H-INDEX
     ITERATION (Lü et al. 2016: start at degree; repeatedly set every
     node to the h-index of its neighbors' current values — the largest
@@ -615,9 +549,9 @@ def kcore(edges: DataFrame, src: str = "src", dst: str = "dst",
     map-reducible). Returns (node, coreness).
 
     Plan shape per round: ONE neighbor-value join + one per-node
-    window (rank by value desc, h = MAX(LEAST(rank, value))) + the
-    convergence probe; ``rounds_per_sync`` logical rounds per
-    materialization (monotone => batching cannot change the fixpoint).
+    window (rank by value desc, h = MAX(LEAST(rank, value))); two
+    logical rounds per driver sync (monotone => batching cannot change
+    the fixpoint).
     All integer; h-index is a SET function, so there are no tie
     hazards to pin."""
     from pyspark.sql import Window as W
@@ -628,15 +562,12 @@ def kcore(edges: DataFrame, src: str = "src", dst: str = "dst",
     sym = (e0.unionByName(e0.select(F.col("b").alias("a"),
                                     F.col("a").alias("b")))
            .distinct().localCheckpoint(eager=False))
-    # size-adaptive join strategy (r7, see strahler_order): the value
-    # table is <= one row per node — below the cap each round's
-    # neighbor-value join broadcasts it (no shuffle of sym per round);
-    # above it the co-shuffled plan is unchanged. One RDD count over
-    # the materialized edge table decides.
     n_sym = sym.count()
-    bc = F.broadcast if n_sym <= 4_000_000 else (lambda df: df)
     cur = sym.groupBy("a").agg(F.count(F.lit(1)).alias("o")) \
              .select(F.col("a").alias("id"), "o")
+    # the value table is <= one row per node (n_sym bounds it): when it
+    # broadcasts, no round shuffles sym
+    bc = broadcast_if_small(cur, n_sym)
 
     def one_round(cur):
         nb = sym.join(bc(cur.select(F.col("id").alias("_b"),
@@ -649,26 +580,11 @@ def kcore(edges: DataFrame, src: str = "src", dst: str = "dst",
                 .agg(F.max(F.least(F.col("r"), F.col("nv"))).alias("o"))
                 .select(F.col("v").alias("id"), "o"))
 
-    cur = cur.localCheckpoint(eager=True)
-    # ONE driver job per batch, NO compare join (r7): h-index values are
-    # monotone NON-INCREASING toward the coreness fixpoint, so sum(o)
-    # strictly decreases until convergence — the sum aggregate rides the
-    # materializing job and an unchanged sum IS convergence (the same
-    # monotone-sum probe as strahler_order's Jacobi loop).
-    prev_sum = None
-    for _ in range(max_rounds):
-        nxt = cur
-        for _ in range(rounds_per_sync):
-            nxt = one_round(nxt)
-        nxt = nxt.localCheckpoint(eager=False)
-        s = nxt.agg(F.sum("o")).collect()[0][0]
-        cur = nxt
-        if s == prev_sum:
-            break
-        prev_sum = s
-    else:
-        raise RuntimeError(
-            f"kcore h-index iteration did not settle in {max_rounds} "
-            "materialization batches")
+    # h-index values are monotone NON-INCREASING toward the coreness
+    # fixpoint, so sum(o) strictly decreases until convergence — the
+    # monotone probe's precondition
+    cur = fixpoint(cur.localCheckpoint(eager=True), one_round, F.sum("o"),
+                   max_rounds=max_rounds, rounds_per_sync=2, monotone=True,
+                   what="kcore h-index iteration")
     return cur.select(F.col("id").alias("node"),
                       F.col("o").alias("coreness"))

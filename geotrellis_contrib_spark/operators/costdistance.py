@@ -46,7 +46,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from geotrellis_contrib_spark.operators.pixels import DTYPES, pack
-from geotrellis_contrib_spark.util import compute_grouped, compute_spread
+from geotrellis_contrib_spark.util import (
+    compute_grouped, compute_spread, fixpoint, pointer_double)
 
 _OFFS = [(dr, dc) for dr in (-1, 0, 1) for dc in (-1, 0, 1)
          if not (dr == 0 and dc == 0)]
@@ -222,28 +223,16 @@ def _solve(tiles: DataFrame,
             "friction": center.friction, "cost": pack(new),
             "improved": improved}])
 
-    # ONE round per materialization: batching 2 cut+relax rounds per
-    # localCheckpoint was measured SLOWER (21s vs 17s at the gate —
-    # the relax stages dominate, not the sync job; same dead end as
-    # cluster.py rounds_per_sync=3, NOTES_r5).
-    # ONE driver job per round (r7): the convergence probe is an
-    # aggregate over the LAZY localCheckpoint, so the same job that
-    # materializes the round's state also answers "did any tile
-    # improve" — instead of an eager checkpoint job plus a probe job.
-    for _ in range(max_iter):
-        pieces = state.mapInPandas(cut, _PIECE_SCHEMA)
-        nxt = compute_grouped(pieces, "source_id", "band", "col", "row") \
-            .applyInPandas(relax_group, _STATE_SCHEMA) \
-            .localCheckpoint(eager=False)
-        changed = int(nxt.agg(F.max("improved")).collect()[0][0] or 0)
-        state = nxt
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"cost_distance did not reach a global fixpoint in "
-            f"{max_iter} rounds; raise max_iter")
-    return state
+    def step(state: DataFrame) -> DataFrame:
+        return compute_grouped(state.mapInPandas(cut, _PIECE_SCHEMA),
+                               "source_id", "band", "col", "row") \
+            .applyInPandas(relax_group, _STATE_SCHEMA)
+
+    # ONE round per sync: batching 2 cut+relax rounds was measured
+    # SLOWER (21s vs 17s at the gate — the relax stages dominate, not
+    # the sync job; NOTES_r5)
+    return fixpoint(state, step, F.max("improved"), max_rounds=max_iter,
+                    what="cost_distance")
 
 
 def _solve_scene(tiles: DataFrame, seed_predicate, tile_size: int,
@@ -455,20 +444,6 @@ def _lcp_scene(tiles: DataFrame, seed_predicate, targets,
              "path_len bigint, cost_q2 bigint")
 
 
-def _ptr_double_steps(ptr: np.ndarray, steps: np.ndarray):
-    """Pointer doubling with hop accumulation: invariant steps[i] = hops
-    from i to ptr[i]; terminals self-point with 0 hops, so the extra
-    composition after convergence adds zero. Fail-loud at 64 rounds."""
-    for _ in range(64):
-        nxt = ptr[ptr]
-        steps = steps + steps[ptr]
-        if np.array_equal(nxt, ptr):
-            return nxt, steps
-        ptr = nxt
-    raise RuntimeError(  # pragma: no cover
-        "least-cost-path pointer doubling did not settle")
-
-
 _LCP_PART = ("source_id string, band int, col bigint, row bigint, "
              "kind int, gid bigint, rep bigint, steps bigint, "
              "final int, q2 bigint")
@@ -500,7 +475,7 @@ def _lcp_dist(tiles: DataFrame, seed_predicate, targets,
     tgc, path_len, cost_q2); path_len parity is bit-exact because cost,
     friction and the predecessor rule are all bit-identical."""
     from geotrellis_contrib_spark.operators.focal import (
-        _assemble_frame, _halo_pieces)
+        _assemble_frame, _frame_gids, _halo_pieces, _own_ring, _ptr_double)
 
     t = int(tile_size)
     p = t + 2
@@ -562,19 +537,13 @@ def _lcp_dist(tiles: DataFrame, seed_predicate, targets,
             sel = flat_ch == k
             ptr[sel] = idxs[sel] + dr * p + dc
             steps0[sel] = 1
-        ptr, steps0 = _ptr_double_steps(ptr, steps0)
+        ptr, steps0 = _ptr_double(ptr, steps0)
         # same global-pixel encoding as the watershed border table
-        g_row = int(row) * t + (idxs // p) - 1
-        g_col = int(col) * t + (idxs % p) - 1
-        gid_of = g_row * 4096 + g_col
+        gid_of = _frame_gids(col, row, t)
         int_flat = interior.ravel()
         fin_flat = finite.ravel()
         out = []
-        fi = idxs.reshape(p, p)
-        ring = np.concatenate([fi[1, 1:1 + t], fi[t, 1:1 + t],
-                               fi[2:t, 1], fi[2:t, t]]) if t > 1 \
-            else fi[1:2, 1]
-        for cell in np.asarray(ring).ravel():
+        for cell in _own_ring(t):
             if not fin_flat[cell]:
                 continue
             d = ptr[cell]
@@ -606,58 +575,11 @@ def _lcp_dist(tiles: DataFrame, seed_predicate, targets,
     parts = compute_grouped(planes, "source_id", "band", "col", "row") \
         .applyInPandas(resolve, _LCP_PART).localCheckpoint(eager=True)
 
-    border = parts.filter(F.col("kind") == 1) \
-        .select("source_id", "band", "gid", "rep", "steps", "final")
-    # ONE driver job per doubling round (r7): lazy checkpoint + pending
-    # aggregate share one job (see focal._watershed_dist). The same
-    # probe also reads the border-table SIZE, which picks the per-round
-    # join strategy (size-adaptive, see cluster.strahler_order): the
-    # O(perimeter) lookup side broadcasts below the cap, keeping each
-    # doubling round a single exchange-free map stage.
-    _pending = F.sum(F.lit(1) - F.col("final"))
-    pending, n_border = [
-        int(v or 0) for v in border.agg(
-            _pending, F.count(F.lit(1))).collect()[0]]
-    bc = F.broadcast if n_border <= 2_000_000 else (lambda df: df)
-    settled = pending == 0
-
-    def _double_once(border):
-        todo = border.filter(F.col("final") == 0)
-        done = border.filter(F.col("final") == 1)
-        step = todo.alias("a").join(
-            bc(border.select(
-                "source_id", "band", F.col("gid").alias("g2"),
-                F.col("rep").alias("r2"), F.col("steps").alias("s2"),
-                F.col("final").alias("f2")).alias("b")),
-            on=[F.col("a.source_id") == F.col("b.source_id"),
-                F.col("a.band") == F.col("b.band"),
-                F.col("a.rep") == F.col("b.g2")], how="left") \
-            .select(F.col("a.source_id").alias("source_id"),
-                    F.col("a.band").alias("band"),
-                    F.col("a.gid").alias("gid"),
-                    F.coalesce(F.col("b.r2"),
-                               F.col("a.rep")).alias("rep"),
-                    (F.col("a.steps") + F.coalesce(F.col("b.s2"),
-                                                   F.lit(0)))
-                    .alias("steps"),
-                    F.coalesce(F.col("b.f2"), F.lit(0)).alias("final"))
-        return done.unionByName(step)
-
-    # two doubling rounds per materialization (see focal._watershed_dist)
-    for _ in range(max_rounds):
-        if settled:
-            break
-        for _ in range(2):
-            border = _double_once(border)
-        border = border.localCheckpoint(eager=False)
-        pending = int(border.agg(_pending).collect()[0][0] or 0)
-        settled = pending == 0
-    if not settled:
-        raise RuntimeError(
-            f"least-cost-path border resolution did not settle in "
-            f"{max_rounds} rounds; a path crosses more than "
-            f"2^{max_rounds} tile boundaries or the border table "
-            f"dropped a link")
+    border, bc = pointer_double(
+        parts.filter(F.col("kind") == 1)
+        .select("source_id", "band", "gid", "rep", "steps", "final"),
+        ["steps"], max_rounds=max_rounds,
+        what="least_cost_path border resolution")
 
     tg = parts.filter(F.col("kind") == 2)
     tdone = tg.filter(F.col("final") == 1) \

@@ -39,7 +39,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from geotrellis_contrib_spark.operators.pixels import DTYPES, pack
-from geotrellis_contrib_spark.util import compute_grouped
+from geotrellis_contrib_spark.util import (
+    compute_grouped, fixpoint, pointer_double)
 
 _Q = 1048576.0  # 2^20 quantization for the order-independent checksum
 
@@ -980,22 +981,13 @@ def _flow_rounds_state(tiles: DataFrame, t: int,
             "improved": improved, "ring": ring_b,
             "chring": chring_b}])
 
-    # ONE driver job per round (r7): lazy localCheckpoint + an aggregate
-    # probe — materialization and the convergence answer share one job.
-    for _ in range(max_iter):
-        pieces = state.mapInPandas(cut, _FLOW_PIECE)
-        nxt = compute_grouped(pieces, "source_id", "band", "col", "row") \
-            .applyInPandas(relax, _FLOW_STATE) \
-            .localCheckpoint(eager=False)
-        changed = int(nxt.agg(F.max("improved")).collect()[0][0] or 0)
-        state = nxt
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"flow_accumulation did not reach a global fixpoint in "
-            f"{max_iter} rounds; raise max_iter")
-    return state
+    def step(state: DataFrame) -> DataFrame:
+        return compute_grouped(state.mapInPandas(cut, _FLOW_PIECE),
+                               "source_id", "band", "col", "row") \
+            .applyInPandas(relax, _FLOW_STATE)
+
+    return fixpoint(state, step, F.max("improved"), max_rounds=max_iter,
+                    what="flow_accumulation")
 
 
 def _flow_acc_rounds(tiles: DataFrame, t: int, max_iter: int) -> DataFrame:
@@ -1046,16 +1038,41 @@ def flow_accumulation(tiles: DataFrame, tile_size: int = 64,
     return _flow_acc_rounds(tiles, t, max_iter)
 
 
-def _ptr_double(ptr: np.ndarray) -> np.ndarray:
-    """Pointer doubling to the fixpoint (log(depth) rounds of
-    ptr = ptr[ptr]); fail-loud at 64 rounds."""
+def _ptr_double(ptr: np.ndarray, *carry: np.ndarray) -> tuple:
+    """In-memory pointer doubling to the fixpoint: log(depth) rounds of
+    ptr = ptr[ptr], each integer ``carry`` array ADDING along the
+    pointer (c = c + c[ptr]; exact — integer addition is associative).
+    Terminals self-point with zero carry, so a round applied after
+    convergence adds zero. Returns ``(ptr, *carry)``; fail-loud at 64
+    rounds."""
     for _ in range(64):
         nxt = ptr[ptr]
+        carry = tuple(c + c[ptr] for c in carry)
         if np.array_equal(nxt, ptr):
-            return nxt
+            return (nxt, *carry)
         ptr = nxt
     raise RuntimeError(  # pragma: no cover
-        "watershed pointer doubling did not settle")
+        "in-memory pointer doubling did not settle")
+
+
+def _own_ring(t: int) -> np.ndarray:
+    """Flat indices, in a tile's (t+2)^2 halo frame, of the tile's OWN
+    1-px ring — the cells neighbor tiles can point into: top row, bottom
+    row, then the left and right columns between them."""
+    fi = np.arange((t + 2) ** 2, dtype=np.int64).reshape(t + 2, t + 2)
+    if t == 1:
+        return fi[1, 1:2]
+    return np.concatenate([fi[1, 1:1 + t], fi[t, 1:1 + t],
+                           fi[2:t, 1], fi[2:t, t]])
+
+
+def _frame_gids(col: int, row: int, t: int) -> np.ndarray:
+    """Global pixel id (gr*4096 + gc, the scene solves' label encoding)
+    of every flat index of tile (col, row)'s (t+2)^2 halo frame."""
+    p = t + 2
+    idxs = np.arange(p * p, dtype=np.int64)
+    return (int(row) * t + idxs // p - 1) * 4096 \
+        + (int(col) * t + idxs % p - 1)
 
 
 _WSHED_SCHEMA = ("source_id string, band int, col bigint, row bigint, "
@@ -1090,7 +1107,7 @@ def _watershed_scene(tiles: DataFrame, t: int) -> DataFrame:
         for k, (dr, dc, _, _) in enumerate(_D8):
             sel = flat_ch == k
             ptr[sel] = idxs[sel] + dr * W + dc
-        ptr = _ptr_double(ptr)
+        ptr = _ptr_double(ptr)[0]
         gi = (r0 * t + (ptr // W)) * 4096 + (c0 * t + (ptr % W))
         labels = np.where(valid.ravel(), gi, -1).reshape(H, W)
         out = []
@@ -1162,12 +1179,8 @@ def _watershed_dist(tiles: DataFrame, t: int, max_rounds: int) -> DataFrame:
         for k, (dr, dc, _, _) in enumerate(_D8):
             sel = flat_ch == k
             ptr[sel] = idxs[sel] + dr * p + dc
-        ptr = _ptr_double(ptr)
-        # global pixel id of a frame coordinate (same encoding as the
-        # scene solve): (row*t + fr-1)*4096 + (col*t + fc-1)
-        g_row = int(row) * t + (idxs // p) - 1
-        g_col = int(col) * t + (idxs % p) - 1
-        gid_of = g_row * 4096 + g_col
+        ptr = _ptr_double(ptr)[0]
+        gid_of = _frame_gids(col, row, t)
         dest = ptr[interior.ravel()]                 # per interior cell
         va = valid.ravel()
         dest_final = interior.ravel()[dest]          # settled in-tile?
@@ -1181,13 +1194,8 @@ def _watershed_dist(tiles: DataFrame, t: int, max_rounds: int) -> DataFrame:
                         "col": int(col), "row": int(row), "kind": 0,
                         "gid": 0, "rep": int(gid_of[d]),
                         "cnt": int(cnt), "final": int(fin)})
-        # BORDER rows: the tile's own 1-px ring (what neighbors can
-        # point into), valid cells only
-        fi = idxs.reshape(p, p)
-        ring = np.concatenate([fi[1, 1:1 + t], fi[t, 1:1 + t],
-                               fi[2:t, 1], fi[2:t, t]]) if t > 1 \
-            else fi[1:2, 1]
-        for cell in np.asarray(ring).ravel():
+        # BORDER rows: the tile's own 1-px ring, valid cells only
+        for cell in _own_ring(t):
             li = cell // p - 1, cell % p - 1
             if not valid[li[0], li[1]]:
                 continue
@@ -1203,58 +1211,11 @@ def _watershed_dist(tiles: DataFrame, t: int, max_rounds: int) -> DataFrame:
                             "source_id", "band", "col", "row") \
         .applyInPandas(resolve, _WSHED_PART).localCheckpoint(eager=True)
 
-    border = parts.filter(F.col("kind") == 1) \
-        .select("source_id", "band", "gid", "rep", "final")
-    # ONE driver job per doubling round (r7): the pending count is an
-    # aggregate over the LAZY localCheckpoint of the next border table,
-    # so materialization and the loop condition share one job. The same
-    # probe reads the border SIZE, which picks the per-round join
-    # strategy (size-adaptive, see cluster.strahler_order): the
-    # O(perimeter) lookup side broadcasts below the cap.
-    _pending = F.sum(F.lit(1) - F.col("final"))
-    pending, n_border = [
-        int(v or 0) for v in border.agg(
-            _pending, F.count(F.lit(1))).collect()[0]]
-    bc = F.broadcast if n_border <= 2_000_000 else (lambda df: df)
-    settled = pending == 0
-
-    def _double_once(border):
-        todo = border.filter(F.col("final") == 0)
-        done = border.filter(F.col("final") == 1)
-        step = todo.alias("a").join(
-            bc(border.select(
-                "source_id", "band", F.col("gid").alias("g2"),
-                F.col("rep").alias("r2"), F.col("final").alias("f2"))
-               .alias("b")),
-            on=[F.col("a.source_id") == F.col("b.source_id"),
-                F.col("a.band") == F.col("b.band"),
-                F.col("a.rep") == F.col("b.g2")], how="left") \
-            .select(F.col("a.source_id").alias("source_id"),
-                    F.col("a.band").alias("band"),
-                    F.col("a.gid").alias("gid"),
-                    F.coalesce(F.col("b.r2"),
-                               F.col("a.rep")).alias("rep"),
-                    F.coalesce(F.col("b.f2"), F.lit(0)).alias("final"))
-        return done.unionByName(step)
-
-    # TWO doubling rounds per materialization (r7): each application is
-    # the same monotone pointer jump (settled rows pass through the
-    # done branch untouched), so chaining quarters the driver syncs at
-    # identical fixpoints — the strahler-contraction batching argument.
-    for _ in range(max_rounds):
-        if settled:
-            break
-        for _ in range(2):
-            border = _double_once(border)
-        border = border.localCheckpoint(eager=False)
-        pending = int(border.agg(_pending).collect()[0][0] or 0)
-        settled = pending == 0
-    if not settled:
-        raise RuntimeError(
-            f"watershed border resolution did not settle in "
-            f"{max_rounds} rounds; a flow path crosses more than "
-            f"2^{max_rounds} tile boundaries or the border table "
-            f"dropped a link")
+    border, bc = pointer_double(
+        parts.filter(F.col("kind") == 1)
+        .select("source_id", "band", "gid", "rep", "final"),
+        [], max_rounds=max_rounds,
+        what="watershed_labels border resolution")
 
     groups = parts.filter(F.col("kind") == 0) \
         .select("source_id", "band", "col", "row", "rep", "cnt", "final")
@@ -1549,21 +1510,14 @@ def _fill_rounds(tiles: DataFrame, t: int, q_fill: float,
             "ring": ring_b}])
 
     piece_schema = _FILL_PIECE + ", dem binary"
-    # ONE driver job per round (r7): lazy localCheckpoint + an aggregate
-    # probe — materialization and the convergence answer share one job.
-    for _ in range(max_iter):
-        pieces = state.mapInPandas(cut, piece_schema)
-        nxt = compute_grouped(pieces, "source_id", "band", "col", "row") \
-            .applyInPandas(relax, _FILL_STATE) \
-            .localCheckpoint(eager=False)
-        changed = int(nxt.agg(F.max("improved")).collect()[0][0] or 0)
-        state = nxt
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"fill_sinks did not reach a global fixpoint in "
-            f"{max_iter} rounds; raise max_iter")
+
+    def step(state: DataFrame) -> DataFrame:
+        return compute_grouped(state.mapInPandas(cut, piece_schema),
+                               "source_id", "band", "col", "row") \
+            .applyInPandas(relax, _FILL_STATE)
+
+    state = fixpoint(state, step, F.max("improved"), max_rounds=max_iter,
+                     what="fill_sinks")
 
     def rollup(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -1817,21 +1771,6 @@ _D8_DIAG = [1 if dr != 0 and dc != 0 else 0
             for dr, dc, _, _ in _D8]
 
 
-def _ptr_double_counts(ptr, no, nd):
-    """Pointer doubling carrying ADDITIVE integer step counts:
-    (ptr, no, nd) -> fixpoint of ptr'=ptr[ptr], n'=n+n[ptr]. Exact —
-    integer addition is associative, unlike the float path length."""
-    for _ in range(64):
-        nxt = ptr[ptr]
-        if np.array_equal(nxt, ptr):
-            return ptr, no, nd
-        no = no + no[ptr]
-        nd = nd + nd[ptr]
-        ptr = nxt
-    raise RuntimeError(  # pragma: no cover
-        "flow_length pointer doubling did not settle")
-
-
 def _flow_length_scene(tiles: DataFrame, t: int) -> DataFrame:
     def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         source_id, band = key[0], int(key[1])
@@ -1887,7 +1826,7 @@ def _flen_init_rect(chf: np.ndarray, ph: int, pw: int):
             nd[sel] = 1
         else:
             no[sel] = 1
-    return _ptr_double_counts(ptr, no, nd)
+    return _ptr_double(ptr, no, nd)
 
 
 def _flow_length_dist(tiles: DataFrame, t: int,
@@ -1916,10 +1855,7 @@ def _flow_length_dist(tiles: DataFrame, t: int,
         ptr, no, nd = _flen_init_rect(chf, p, p)
         interior = np.zeros((p, p), dtype=bool)
         interior[1:1 + t, 1:1 + t] = True
-        idxs = np.arange(p * p, dtype=np.int64)
-        g_row = int(row) * t + (idxs // p) - 1
-        g_col = int(col) * t + (idxs % p) - 1
-        gid_of = g_row * 4096 + g_col
+        gid_of = _frame_gids(col, row, t)
         intmask = interior.ravel()
         vmask = np.zeros(p * p, dtype=bool)
         vmask[intmask] = valid.ravel()
@@ -1939,11 +1875,7 @@ def _flow_length_dist(tiles: DataFrame, t: int,
                         "gid": 0, "rep": int(gid_of[d]),
                         "cnt": int(cnt), "no": 0, "nd": 0,
                         "final": int(fin)})
-        fi = idxs.reshape(p, p)
-        ring = np.concatenate([fi[1, 1:1 + t], fi[t, 1:1 + t],
-                               fi[2:t, 1], fi[2:t, t]]) if t > 1 \
-            else fi[1:2, 1]
-        for cell in np.asarray(ring).ravel():
+        for cell in _own_ring(t):
             li = cell // p - 1, cell % p - 1
             if not valid[li[0], li[1]]:
                 continue
@@ -1960,54 +1892,11 @@ def _flow_length_dist(tiles: DataFrame, t: int,
                             "source_id", "band", "col", "row") \
         .applyInPandas(resolve, _FLEN_PART).localCheckpoint(eager=True)
 
-    border = parts.filter(F.col("kind") == 1) \
-        .select("source_id", "band", "gid", "rep", "no", "nd", "final")
-    # ONE driver job per doubling round (r7): lazy checkpoint + pending
-    # aggregate share one job (see _watershed_dist).
-    _pending = F.sum(F.lit(1) - F.col("final"))
-    pending, n_border = [
-        int(v or 0) for v in border.agg(
-            _pending, F.count(F.lit(1))).collect()[0]]
-    bc = F.broadcast if n_border <= 2_000_000 else (lambda df: df)
-    settled = pending == 0
-
-    def _double_once(border):
-        todo = border.filter(F.col("final") == 0)
-        done = border.filter(F.col("final") == 1)
-        step = todo.alias("a").join(
-            bc(border.select(
-                "source_id", "band", F.col("gid").alias("g2"),
-                F.col("rep").alias("r2"), F.col("no").alias("no2"),
-                F.col("nd").alias("nd2"), F.col("final").alias("f2"))
-               .alias("b")),
-            on=[F.col("a.source_id") == F.col("b.source_id"),
-                F.col("a.band") == F.col("b.band"),
-                F.col("a.rep") == F.col("b.g2")], how="left") \
-            .select(F.col("a.source_id").alias("source_id"),
-                    F.col("a.band").alias("band"),
-                    F.col("a.gid").alias("gid"),
-                    F.coalesce(F.col("b.r2"),
-                               F.col("a.rep")).alias("rep"),
-                    (F.col("a.no") + F.coalesce(F.col("b.no2"),
-                                                F.lit(0))).alias("no"),
-                    (F.col("a.nd") + F.coalesce(F.col("b.nd2"),
-                                                F.lit(0))).alias("nd"),
-                    F.coalesce(F.col("b.f2"), F.lit(0)).alias("final"))
-        return done.unionByName(step)
-
-    # two doubling rounds per materialization (see _watershed_dist)
-    for _ in range(max_rounds):
-        if settled:
-            break
-        for _ in range(2):
-            border = _double_once(border)
-        border = border.localCheckpoint(eager=False)
-        pending = int(border.agg(_pending).collect()[0][0] or 0)
-        settled = pending == 0
-    if not settled:
-        raise RuntimeError(
-            f"flow_length border resolution did not settle in "
-            f"{max_rounds} rounds")
+    border, bc = pointer_double(
+        parts.filter(F.col("kind") == 1)
+        .select("source_id", "band", "gid", "rep", "no", "nd", "final"),
+        ["no", "nd"], max_rounds=max_rounds,
+        what="flow_length border resolution")
 
     local = parts.filter(F.col("kind") == 2) \
         .select("source_id", "band", "col", "row",

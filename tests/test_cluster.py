@@ -71,17 +71,31 @@ def test_batched_rounds_halve_materializations(spark):
 
 def test_batched_rounds_match_single_round_labels(spark):
     # batching must be result-identical to one round per sync (min-label
-    # propagation is idempotent/order-free)
+    # propagation is idempotent/order-free): drive the CC round through
+    # the shared fixpoint loop at 1 and 2 rounds per sync
+    from pyspark.sql import functions as F
+
+    from geotrellis_contrib_spark.util import fixpoint
+
     rng = np.random.default_rng(7)
     edges = [(int(a), int(b)) for a, b in rng.integers(0, 80, size=(100, 2)) if a != b]
+    sym = spark.createDataFrame(edges + [(b, a) for a, b in edges],
+                                "src long, dst long").distinct()
+    labels = sym.select(F.col("src").alias("id")).distinct() \
+                .withColumn("component", F.col("id"))
+    changed = F.max((F.col("component") != F.col("_old")).cast("int"))
+
+    def run(rounds_per_sync):
+        out = fixpoint(labels, lambda cur: cl._propagate_and_double(sym, cur),
+                       changed, max_rounds=40,
+                       rounds_per_sync=rounds_per_sync, what="cc test")
+        return {r.id: r.component for r in out.collect()}
+
     df = spark.createDataFrame(edges, "src long, dst long")
-    one = {r.id: r.component
-           for r in cl.connected_components(df, rounds_per_sync=1,
-                                            small_graph_edges=0).collect()}
-    two = {r.id: r.component
-           for r in cl.connected_components(df, rounds_per_sync=2,
-                                            small_graph_edges=0).collect()}
-    assert one == two == _uf_oracle(edges)
+    public = {r.id: r.component
+              for r in cl.connected_components(
+                  df, small_graph_edges=0).collect()}
+    assert run(1) == run(2) == public == _uf_oracle(edges)
 
 
 def test_small_graph_driver_path_matches_distributed(spark):

@@ -96,3 +96,15 @@ def test_unary_cycle_fails_loud_distributed_path(spark):
     df = spark.createDataFrame([(1, 2), (2, 1)], "child long, parent long")
     with pytest.raises(Exception, match="cycle in the flow"):
         strahler_order(df, small_graph_edges=0).collect()
+
+
+def test_unary_cycle_guard_survives_column_pruning(spark):
+    # a consumer that never reads the strahler column (select("node"),
+    # a bare count) must still hit the cycle guard
+    import pytest
+    df = spark.createDataFrame([(1, 2), (2, 1), (10, 11), (12, 11)],
+                               "child long, parent long")
+    with pytest.raises(Exception, match="cycle in the flow"):
+        strahler_order(df, small_graph_edges=0).select("node").count()
+    with pytest.raises(Exception, match="cycle in the flow"):
+        strahler_order(df, small_graph_edges=0).count()
