@@ -65,9 +65,9 @@ def broadcast_if_small(df: DataFrame, rows: int):
     per-round lookup joins of a fixpoint plan as full shuffle joins even
     when the lookup side is a few KB. The caller already holds an exact
     row count (from a probe it needs anyway), so the decision costs no
-    job. The byte estimate is rows x the schema's default row size — the
-    estimate Catalyst itself uses for a relation without statistics — so
-    a wide border table (string id + longs) stops broadcasting sooner
+    job. The byte estimate is rows x the schema's default row size (the
+    per-row width Catalyst assumes for a known row count), so a wide
+    border table (string id + longs) stops broadcasting sooner
     than a two-long pointer table. A negative threshold (broadcast
     disabled) never broadcasts."""
     spark = df.sparkSession
@@ -92,7 +92,8 @@ def fixpoint(state: DataFrame, step, probe, *, max_rounds: int,
     Convergence, one of exactly two rules:
 
     * default — the probe reaches 0 (or null, on an empty state): the
-      probe counts or flags rows the last sync still changed;
+      probe counts or flags rows still in motion, e.g. rows the last
+      round changed or rows not yet final;
     * ``monotone=True`` — the probe stops changing between syncs. Valid
       ONLY when every round moves the state monotonically (e.g. values
       only grow) so that the probe, typically ``sum``, strictly changes
@@ -141,7 +142,7 @@ def pointer_double(border: DataFrame, carry, *, max_rounds: int,
     Returns ``(resolved border, broadcast decision)``."""
     pending = F.sum(F.lit(1) - F.col("final"))
     n_pending, n_rows = border.agg(pending, F.count(F.lit(1))).collect()[0]
-    bc = broadcast_if_small(border, int(n_rows or 0))
+    bc = broadcast_if_small(border, n_rows)
     if not n_pending:
         return border, bc
 
